@@ -61,29 +61,22 @@ object OptBench {
         }
       case Some("ab") =>
         // interleaved same-process A/B of a runtime SQL-conf set:
-        //   OPT_CONF="k=v;k=v" — arm B sets them, arm A restores prior
-        // values. Each round runs every query in both arms back to
-        // back, so host drift hits both arms equally.
+        //   OPT_CONF="k=v;k=v" — arm B runs in a withSqlConf scope of
+        // them, arm A on the session as is. Each round runs every query
+        // in both arms back to back, so host drift hits both arms equally.
         val confs = sys.env.getOrElse("OPT_CONF", "").split(";")
           .filter(_.nonEmpty).map { kv =>
             val Array(k, v) = kv.split("=", 2); (k, v)
-          }
+          }.toSeq
         val runs = sys.env.getOrElse("OPT_RUNS", "3").toInt
         val names = args.drop(1)
-        val prior = confs.map { case (k, _) =>
-          (k, try Some(spark.conf.get(k)) catch { case _: Throwable => None })
-        }
-        def setB(): Unit = confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        def setA(): Unit = prior.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None)    => spark.conf.unset(k)
-        }
         spark.range(1000000).selectExpr("sum(id)").collect()
         val sa = scala.collection.mutable.Map.empty[String, List[Double]].withDefaultValue(Nil)
         val sb = scala.collection.mutable.Map.empty[String, List[Double]].withDefaultValue(Nil)
         names.foreach { n => // warm both arms
           try { SparkEntry.queries(n)(spark, dir).count()
-            setB(); SparkEntry.queries(n)(spark, dir).count(); setA() }
+            graft.api.Graft.withSqlConf(spark, confs: _*) {
+              SparkEntry.queries(n)(spark, dir).count() } }
           catch { case e: Throwable => println(s"[warm] $n FAILED: ${e.getMessage}") }
         }
         // alternate arm order each round: a fixed A-then-B order was
@@ -94,12 +87,10 @@ object OptBench {
             try { SparkEntry.queries(n)(spark, dir).count()
               sa(n) ::= (System.nanoTime() - t0) / 1e9 } catch { case _: Throwable => () }
           }
-          def runB(): Unit = {
-            setB()
+          def runB(): Unit = graft.api.Graft.withSqlConf(spark, confs: _*) {
             val t0 = System.nanoTime()
             try { SparkEntry.queries(n)(spark, dir).count()
               sb(n) ::= (System.nanoTime() - t0) / 1e9 } catch { case _: Throwable => () }
-            setA()
           }
           if (r % 2 == 1) { runA(); runB() } else { runB(); runA() }
         }
@@ -172,14 +163,18 @@ object OptBench {
           }
           spark.sparkContext.addSparkListener(listener)
           val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, dir).count()
-          val total = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(600)
-          spark.sparkContext.removeSparkListener(listener)
+          val total =
+            try { SparkEntry.queries(name)(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
+            finally {
+              Thread.sleep(600) // let the listener bus drain
+              spark.sparkContext.removeSparkListener(listener)
+            }
           val js = jobsB.synchronized(jobsB.values.toSeq)
           println(f"[jobs] $name total=$total%.3f njobs=${js.size}")
           js.foreach { j =>
-            println(f"[jobs]   id=${j.id} wall=${j.t1 - j.t0}ms stages=${j.stages} tasks=${j.tasks} ${j.nm}")
+            // a job whose end event has not drained has no wall yet
+            val wall = if (j.t1 >= 0) s"${j.t1 - j.t0}ms" else "incomplete"
+            println(f"[jobs]   id=${j.id} wall=$wall stages=${j.stages} tasks=${j.tasks} ${j.nm}")
           }
         }
       case Some("profile") =>

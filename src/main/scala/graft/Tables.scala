@@ -40,6 +40,8 @@ object Tables {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    // Set for the life of the session, NOT scoped: the parquet scan reads
+    // this conf when it executes, after this method has returned.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(spark, dir, "events")
     raw.schema("ts").dataType match {

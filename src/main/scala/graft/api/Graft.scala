@@ -472,68 +472,45 @@ object Graft {
     //    what rescues crawl-prone residues, not more contraction.
     val maxContractLevels = 1
     // counted unconditionally (r16): the scalar now ALSO gates the
-    // tiny-fixpoint mode below, and it is a shuffle-free scan of the
+    // measured-tiny scope below, and it is a shuffle-free scan of the
     // just-checkpointed blocks at any scale
     val nSym = symRaw.count()
     val contract = preCollapse && level < maxContractLevels && nSym > 1024 &&
       (parentSymEdges < 0L || nSym * 10L < parentSymEdges * 7L)
-    if (sys.props.get("graft.cc.debug").contains("true"))
-      System.err.println(s"[cc] level=$level symEdges=$nSym contract=$contract")
-    // MEASURED-TINY MODE (r16, guide §2.6/§1.2): with AQE on, every
-    // Exchange of every driver-side step (contraction joins, fixpoint
-    // rounds, convergence probes) materializes as its own query stage
-    // = its own driver job (geo_dbscan measured 132 jobs; profile
-    // split construct=7.2 s vs exec=1.0 s — a fixed-overhead wall, not
-    // compute). Disabling AQE globally was measured 4.3× WORSE (its
-    // partition coalescing is load-bearing for data-sized plans), so
-    // the switch keys on the MEASURED symmetrized edge count: below
-    // the threshold, everything from here to the returned labels runs
-    // with AQE off, a size-derived partition count, and codegen off
-    // (each round plans fresh expression ids, so whole-stage codegen
-    // recompiles per round and can never hit its cache). Scale-adaptive
-    // by construction: at 100 TB the level-0 graph measures huge → AQE
-    // stays on; only a residue that measures tiny — exactly where
-    // fixed per-job/per-plan overhead dominates — drops into this
-    // mode, and the partition count derives from nSym, not from the
-    // local core count. `graft.cc.tinyFixpoint` (default on) is the
-    // operational kill switch / A-B knob.
-    val spark = edges.sparkSession
-    val tinyFixpoint =
-      spark.conf.get("graft.cc.tinyFixpoint", "true").toBoolean &&
-        nSym <= spark.conf.get("graft.cc.tinyFixpointMaxEdges",
-          (1L << 20).toString).toLong
-    val priorAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val priorParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    val priorCodegen = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    if (tinyFixpoint) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val parts = math.max(1L, math.min(priorParts.toLong, nSym / 65536L + 1L))
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    // MEASURED-TINY MODE (r16): with AQE on, every Exchange of every
+    // driver-side step (contraction joins, fixpoint rounds, convergence
+    // probes) materializes as its own query-stage driver job (geo_dbscan
+    // measured 132 jobs; construct=7.2 s vs exec=1.0 s). Disabling AQE
+    // globally was measured 4.3× WORSE, so the scope keys on the
+    // MEASURED symmetrized edge count — see [[withTinyExec]].
+    withTinyExec(edges.sparkSession, nSym) {
+      if (contract) {
+        val l0 = symRaw.groupBy(col("__src")).agg(min(col("__dst")).as("__m"))
+          .select(col("__src").as("id"), least(col("__src"), col("__m")).as("l0"))
+          .localCheckpoint()
+        val la = l0.select(col("id").as("__src"), col("l0").as("__la"))
+        val lb = l0.select(col("id").as("__dst"), col("l0").as("__lb"))
+        val contracted = symRaw.join(la, "__src").join(lb, "__dst")
+          .filter(col("__la") =!= col("__lb"))
+          .select(col("__la").as(srcCol), col("__lb").as(dstCol))
+          .distinct()
+        val inner = ccImpl(contracted, srcCol, dstCol, maxRounds,
+            preCollapse = true, parentSymEdges = nSym, level = level + 1)
+          .select(col("id").as("l0"), col("component").as("__c"))
+        // fully-collapsed clusters have no contracted edge: their label
+        // IS the component
+        l0.join(inner, Seq("l0"), "left")
+          .select(col("id"), coalesce(col("__c"), col("l0")).as("component"))
+      } else ccFixpoint(symRaw, maxRounds)
     }
-    try {
-    if (contract) {
-      val l0 = symRaw.groupBy(col("__src")).agg(min(col("__dst")).as("__m"))
-        .select(col("__src").as("id"), least(col("__src"), col("__m")).as("l0"))
-        .localCheckpoint()
-      val la = l0.select(col("id").as("__src"), col("l0").as("__la"))
-      val lb = l0.select(col("id").as("__dst"), col("l0").as("__lb"))
-      val contracted = symRaw.join(la, "__src").join(lb, "__dst")
-        .filter(col("__la") =!= col("__lb"))
-        .select(col("__la").as(srcCol), col("__lb").as(dstCol))
-        .distinct()
-      val inner = ccImpl(contracted, srcCol, dstCol, maxRounds,
-          preCollapse = true, parentSymEdges = nSym, level = level + 1)
-        .select(col("id").as("l0"), col("component").as("__c"))
-      // fully-collapsed clusters have no contracted edge: their label
-      // IS the component
-      return l0.join(inner, Seq("l0"), "left")
-        .select(col("id"), coalesce(col("__c"), col("l0")).as("component"))
-    }
-    // symRaw is already hash-partitioned + checkpointed above, so no
-    // round re-shuffles the O(E) side (the dominant per-round volume on
+  }
+
+  /** The plain min-label fixpoint of [[ccImpl]] over the already
+    * symmetrized, `__src`-partitioned and checkpointed edge list. */
+  private def ccFixpoint(sym: DataFrame, maxRounds: Int): DataFrame = {
+    // sym is already hash-partitioned + checkpointed, so no round
+    // re-shuffles the O(E) side (the dominant per-round volume on
     // dense graphs); only the O(V) label side moves each round
-    val sym = symRaw
     var labels = sym.select(col("__src").as("id")).distinct()
       .withColumn("component", col("id")).localCheckpoint()
     // Convergence probe, by id type. INTEGRAL ids: labels only ever
@@ -636,8 +613,6 @@ object Graft {
       if (scalarProbeSafe) {
         val cur = labelSum(comp)
         done = prev == cur
-        if (sys.props.get("graft.cc.debug").contains("true"))
-          System.err.println(s"[cc] level=$level round=$round sum=$cur")
         prev = cur
       } else {
         done = comp.join(labels.withColumnRenamed("component", "__old"), "id")
@@ -646,8 +621,6 @@ object Graft {
       labels = comp
       round += 1
     }
-    if (sys.props.get("graft.cc.debug").contains("true"))
-      System.err.println(s"[cc] level=$level fixpoint rounds=$round")
     if (!done)
       // HARD FAILURE, not a warning (r12 verdict #1): truncated labels
       // are NOT components, and every downstream endpoint (dedupCorpus,
@@ -662,16 +635,9 @@ object Graft {
           "converging - labels would be incomplete; raise maxRounds " +
           "or investigate the graph structure")
     // every round's labels were materialized by the convergence action,
-    // so restoring the session conf here cannot change what the
-    // returned (checkpointed) frame computes
+    // so restoring the session conf after the caller's scope cannot
+    // change what the returned (checkpointed) frame computes
     labels
-    } finally {
-      if (tinyFixpoint) {
-        spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
-        spark.conf.set("spark.sql.shuffle.partitions", priorParts)
-        spark.conf.set("spark.sql.codegen.wholeStage", priorCodegen)
-      }
-    }
   }
 
   /** End-to-end corpus deduplication — the user-facing endpoint
@@ -955,52 +921,68 @@ object Graft {
 
   // ---------- corpus-preparation operators ----------
 
-  /** Run `body` — driver-side construction that materializes BOUNDED
-    * intermediates (seeded BFS frontiers, beam steps, bounded-model
-    * collects) — with AQE off, a size-derived shuffle-partition count
-    * and whole-stage codegen off, restoring the session conf after.
-    * The generalization of ccImpl's measured-tiny fixpoint mode (r16,
-    * guide §2.6/§1.2): with AQE on, every Exchange of every
+  /** Run `body` with the session SQL conf `pairs` set, restoring each
+    * key after — to its prior value, or UNSET if it was unset before —
+    * also when `body` throws. The engine's only way to override
+    * session conf. Scopes on one session are serialized by a per-session
+    * reentrant lock held for the whole body (nested scopes, e.g.
+    * ccImpl's recursion, restore innermost-first), so overlapping scopes
+    * from two threads can never capture each other's values as their
+    * prior. The lock cannot stop an UNRELATED query planned concurrently
+    * on the same session from seeing the scoped values: callers of
+    * scoped operators keep to one query per session at a time. */
+  private[graft] def withSqlConf[T](spark: SparkSession, pairs: (String, String)*)
+                                   (body: => T): T = scopeLock(spark).synchronized {
+    // getAll holds only explicitly set keys; getOption falls back to a
+    // registered default and cannot tell "unset" from "set to default"
+    val set = spark.conf.getAll
+    val prior = pairs.map { case (k, _) => k -> set.get(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  private val scopeLocks = new java.util.WeakHashMap[SparkSession, AnyRef]()
+
+  private def scopeLock(spark: SparkSession): AnyRef =
+    scopeLocks.synchronized(scopeLocks.computeIfAbsent(spark, _ => new AnyRef))
+
+  /** Whether [[withTinyExec]] fires for this measured size — exposed so
+    * a caller can make a companion decision (e.g. eagerly materialize a
+    * bounded tail) under the SAME gate. */
+  private[graft] def tinyExecFires(measuredRows: Long): Boolean =
+    measuredRows >= 0 && measuredRows <= (1L << 20)
+
+  /** The measured-tiny scope (r16): run `body` — driver-side
+    * construction that materializes BOUNDED intermediates (CC fixpoint
+    * rounds, seeded BFS frontiers, beam steps, bounded-model collects)
+    * — under [[withSqlConf]] with AQE off, a size-derived
+    * shuffle-partition count `min(prior, rows / 65536 + 1)` and
+    * whole-stage codegen off. With AQE on, every Exchange of every
     * materializing step runs as its own query-stage driver job
     * (graph_betweenness measured 53 jobs of 1-2 tasks × 10-70 ms —
     * fixed overhead, not compute), and each freshly-planned step
     * recompiles whole-stage codegen (new expression ids never hit the
     * cache). Scale discipline: the caller passes a MEASURED row count
     * (from an already-checkpointed input, where counting is a
-    * shuffle-free cache scan); above the threshold — any real
-    * deployment scale — the body runs untouched under AQE. The
+    * shuffle-free cache scan); above the fixed 2^20 threshold — any
+    * real deployment scale — the body runs untouched under AQE. The
     * partition count derives from the measured size, never from the
-    * local core count. `graft.tinyExec.enabled` is the operational
-    * kill switch, `graft.tinyExec.maxRows` the threshold knob. */
-  /** Whether [[withTinyExec]] would fire for this measured size —
-    * exposed so a caller can make a companion decision (e.g. eagerly
-    * materialize a bounded tail) under the SAME gate. */
-  private[graft] def tinyExecFires(spark: SparkSession, measuredRows: Long): Boolean =
-    spark.conf.get("graft.tinyExec.enabled", "true").toBoolean &&
-      measuredRows >= 0 &&
-      measuredRows <= spark.conf.get("graft.tinyExec.maxRows",
-        (1L << 20).toString).toLong
-
+    * local core count. */
   private[graft] def withTinyExec[T](spark: SparkSession, measuredRows: Long)
-                                    (body: => T): T = {
-    val on = tinyExecFires(spark, measuredRows)
-    if (!on) body
-    else {
-      val priorAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      val priorParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-      val priorCodegen = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.max(1L, math.min(priorParts.toLong, measuredRows / 65536L + 1L)).toString)
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      try body
-      finally {
-        spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
-        spark.conf.set("spark.sql.shuffle.partitions", priorParts)
-        spark.conf.set("spark.sql.codegen.wholeStage", priorCodegen)
-      }
+                                    (body: => T): T =
+    if (!tinyExecFires(measuredRows)) body
+    else scopeLock(spark).synchronized { // the prior width is read under the lock
+      val prior = spark.conf.get("spark.sql.shuffle.partitions").toLong
+      withSqlConf(spark,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" ->
+          math.max(1L, math.min(prior, measuredRows / 65536L + 1L)).toString,
+        "spark.sql.codegen.wholeStage" -> "false")(body)
     }
-  }
 
   /** Key-hashed explicit-N repartition applied ONLY when the frame's
     * measured parallelism (its scan split count — a planning-time
@@ -1029,14 +1011,9 @@ object Graft {
     * fired anyway — this only forfeits an optimization that is wrong
     * exactly here. AQE itself stays ON (skew splitting, join
     * planning). */
-  private[graft] def checkpointWide(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prior = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try df.localCheckpoint()
-    finally spark.conf.set(key, prior)
-  }
+  private[graft] def checkpointWide(df: DataFrame): DataFrame =
+    withSqlConf(df.sparkSession,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(df.localCheckpoint())
 
   /** First 8 md5 hex chars of an id as a positive long — the
     * deterministic "random" driver for splits and sampling

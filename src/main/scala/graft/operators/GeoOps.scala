@@ -435,11 +435,11 @@ object GeoOps {
     // When the pair graph measures tiny, materialize the (cluster-
     // count-sized) census under one-job-per-action conf; at real scale
     // the gate stays off and the lazy plan is returned unchanged.
+    val tiny = graft.api.Graft.tinyExecFires(nPairs)
     graft.api.Graft.withTinyExec(spark, nPairs) {
       val out = census.unionByName(noise)
         .orderBy(col("n_pts").desc, col("cluster"))
-      if (graft.api.Graft.tinyExecFires(spark, nPairs)) out.localCheckpoint()
-      else out
+      if (tiny) out.localCheckpoint() else out
     }
   }
 

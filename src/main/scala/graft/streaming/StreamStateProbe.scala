@@ -28,8 +28,6 @@ object StreamStateProbe {
   def run(spark: SparkSession): Seq[String] = {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
     def evs(n: Int, keys: Int): Seq[Ev] =
       (0 until n).map { i =>
@@ -80,23 +78,26 @@ object StreamStateProbe {
     val farEv = Ev(999999999L, ts(100000), 999999L, "click", 1.0)
     val farDoc = Doc(999999999L, ts(100000), "far future watermark nudge")
 
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    for ((n, keys, tag) <- Seq((1000, 1000, "1x"), (10000, 10000, "10x"),
-                               (10000, 1000, "10x-replay-1x-keys"))) {
-      out ++= probe(s"dedup_within_wm[$tag]",
-        Streams.dedupWithinWatermark, evs(n, keys), farEv)
-      out ++= probe(s"neardup_ingest[$tag]",
-        Streams.nearDupIngest, docs(n, keys), farDoc)
-      out ++= probe(s"session_counts[$tag]",
-        Streams.sessionCounts, evs(n, keys), farEv)
+    graft.api.Graft.withSqlConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      val out = scala.collection.mutable.ArrayBuffer.empty[String]
+      for ((n, keys, tag) <- Seq((1000, 1000, "1x"), (10000, 10000, "10x"),
+                                 (10000, 1000, "10x-replay-1x-keys"))) {
+        out ++= probe(s"dedup_within_wm[$tag]",
+          Streams.dedupWithinWatermark, evs(n, keys), farEv)
+        out ++= probe(s"neardup_ingest[$tag]",
+          Streams.nearDupIngest, docs(n, keys), farDoc)
+        out ++= probe(s"session_counts[$tag]",
+          Streams.sessionCounts, evs(n, keys), farEv)
+      }
+      // firstSeen: flatMapGroupsWithState with NoTimeout — state is
+      // per-USER and deliberately not watermark-evicted (documented);
+      // the probe shows rows track users, and survive the advance
+      out ++= probe("first_seen[1x]",
+        df => Streams.firstSeen(spark, df), evs(1000, 1000), farEv)
+      out ++= probe("first_seen[10x]",
+        df => Streams.firstSeen(spark, df), evs(10000, 10000), farEv)
+      out.toSeq
     }
-    // firstSeen: flatMapGroupsWithState with NoTimeout — state is
-    // per-USER and deliberately not watermark-evicted (documented);
-    // the probe shows rows track users, and survive the advance
-    out ++= probe("first_seen[1x]",
-      df => Streams.firstSeen(spark, df), evs(1000, 1000), farEv)
-    out ++= probe("first_seen[10x]",
-      df => Streams.firstSeen(spark, df), evs(10000, 10000), farEv)
-    out.toSeq
   }
 }

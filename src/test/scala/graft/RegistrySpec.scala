@@ -72,17 +72,27 @@ class RegistrySpec extends SparkSpec {
     // DECIMAL arithmetic internal and cast the final projection to
     // DOUBLE (exact when quanta < 2^53) or VARCHAR. Analysis only — no
     // query is executed, but eager model-training stages (bounded
-    // artifacts) do run at sf0.001.
+    // artifacts) do run at sf0.001. Those stages may override session
+    // conf only inside a scope: the conf after construction must equal
+    // the conf before, except Tables.events' session-lifetime
+    // nanosAsLong (the parquet scan reads it at execution time).
     import org.apache.spark.sql.types.{ArrayType, DecimalType, MapType}
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    val sessionLifetime = "spark.sql.legacy.parquet.nanosAsLong"
+    def conf = spark.conf.getAll - sessionLifetime
+    val (offenders, leaks) = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
+        val before = conf
         val bad = fn(spark, sf).schema.fields.collect {
           case f if f.dataType.isInstanceOf[ArrayType] ||
             f.dataType.isInstanceOf[MapType] ||
             f.dataType.isInstanceOf[DecimalType] => f.name
         }
-        if (bad.isEmpty) None else Some(s"$name(${bad.mkString(",")})")
-    }
-    assert(offenders.isEmpty, s"array/map/decimal-valued outputs: $offenders")
+        val after = conf
+        (if (bad.isEmpty) None else Some(s"$name(${bad.mkString(",")})"),
+          if (after == before) None
+          else Some(s"$name(now ${after.toSet diff before.toSet}, was ${before.toSet diff after.toSet})"))
+    }.unzip
+    assert(offenders.flatten.isEmpty, s"array/map/decimal-valued outputs: ${offenders.flatten}")
+    assert(leaks.flatten.isEmpty, s"session conf changed by construction: ${leaks.flatten}")
   }
 }

@@ -66,4 +66,60 @@ class Round16OpsSpec extends SparkSpec {
         math.round(r.getDouble(1) * 100), r.getLong(2))).toSet
     assert(got === ref)
   }
+
+  // ---- scoped session conf (Graft.withSqlConf / withTinyExec) ----
+
+  private val codegenKey = "spark.sql.codegen.wholeStage"
+
+  test("tiny scope: a key unset before the scope is unset after it") {
+    assert(!spark.conf.getAll.contains(codegenKey), "SparkSpec never sets it")
+    val before = spark.conf.getAll
+    val inside = graft.api.Graft.withTinyExec(spark, 10L) {
+      (spark.conf.get(codegenKey), spark.conf.get("spark.sql.adaptive.enabled"),
+        spark.conf.get("spark.sql.shuffle.partitions"))
+    }
+    assert(inside === (("false", "false", "1")))
+    assert(spark.conf.getAll === before)
+  }
+
+  test("withSqlConf restores the session conf when the body throws") {
+    val before = spark.conf.getAll
+    intercept[IllegalStateException] {
+      graft.api.Graft.withSqlConf(spark, codegenKey -> "false",
+          "spark.sql.shuffle.partitions" -> "1") {
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(spark.conf.getAll === before)
+  }
+
+  test("withSqlConf: overlapping scopes on one session never capture each other's values") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val before = spark.conf.getAll
+    val aInside, aDone = new CountDownLatch(1)
+    @volatile var seenByA, seenByB: Option[String] = None
+    val key = "spark.sql.shuffle.partitions"
+    val b = new Thread(() => graft.api.Graft.withSqlConf(spark, key -> "2") {
+      // without serialization B would now be inside A's scope, holding
+      // A's "1" as its prior, and would restore it after A had restored
+      aDone.await(30, TimeUnit.SECONDS)
+      seenByB = Some(spark.conf.get(key))
+    })
+    val a = new Thread(() =>
+      try graft.api.Graft.withSqlConf(spark, key -> "1") {
+        aInside.countDown()
+        // hold the scope until B is parked on the session's scope lock
+        val deadline = System.nanoTime() + 10000000000L
+        while (b.getState != Thread.State.BLOCKED && System.nanoTime() < deadline)
+          Thread.sleep(5)
+        seenByA = Some(spark.conf.get(key))
+      } finally aDone.countDown())
+    a.start()
+    assert(aInside.await(30, TimeUnit.SECONDS))
+    b.start()
+    a.join(); b.join()
+    assert(seenByA === Some("1"))
+    assert(seenByB === Some("2"))
+    assert(spark.conf.getAll === before)
+  }
 }
